@@ -11,8 +11,8 @@ table, not fused with corpus synthesis.
 Timed phase: the end-to-end extraction pipeline (explode → geometry →
 filters → strip → reading-order kernel → assembled docs) at:
 
-* ``$SPARK_GRAFT_CPUS`` (default 32) — the headline throughput + the
-  secondary query timings;
+* ``$SPARK_GRAFT_CPUS`` (default: the host's core count) — the headline
+  throughput + the secondary query timings;
 * 2 and 8 cores — the north-rule N vs 4N scaling pair. 2→8 is used instead
   of 8→32 because this sandbox cannot sustain 32 busy threads consistently
   (32-thread wall times vary 2-3× across identical runs; 2- and 8-thread
@@ -54,8 +54,7 @@ def prep_corpus(sf_dir: str, replicate: int, out_path: str) -> None:
     from paddleocr_spark.session import get_spark
     from paddleocr_spark.synth import synth_spans
 
-    spark = get_spark("bench-prep", cores=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("bench-prep")
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     if replicate > 1:
@@ -76,8 +75,7 @@ def double_corpus(src_path: str, out_path: str) -> None:
 
     from paddleocr_spark.session import get_spark
 
-    spark = get_spark("bench-prep2", cores=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("bench-prep2")
     spark.sparkContext.setLogLevel("ERROR")
     c = spark.read.parquet(src_path)
     # ids stay in the 'doc_<number>' shape (the drop_score stage parses
@@ -157,8 +155,10 @@ def _spawn(cores: int, corpus_path: str, sf_dir: str, full: bool,
 
 
 def main() -> int:
+    from paddleocr_spark.session import default_cores
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    cores_hi = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores_hi = default_cores()
     replicate = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "128"))
     do_scaling = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
 

@@ -46,10 +46,11 @@ STYLE_TOKENS = [
     "<i>", "</i>",
 ]
 
-#: Same token set as a single-pass regex alternation (for JVM-side
-#: ``regexp_replace``). Single-pass == the reference's sequential loop as long
-#: as removing one token never *creates* another (true for any text that does
-#: not embed split token fragments; our corpus never does — asserted in tests).
+#: Same token set as a single-pass regex alternation. Nothing in the package
+#: uses it: P11 runs the sequential literal chain (pipeline.strip_styles),
+#: because single-pass differs from the reference's loop whenever removing one
+#: token *creates* another. A test pins it to the loop on texts without split
+#: token fragments.
 STYLE_TOKEN_REGEX = (
     "<strike>|<sup>|</sub>|<b>|</b>|<sub>|</sup>|<overline>|</overline>"
     "|<underline>|</underline>|<i>|</i>"

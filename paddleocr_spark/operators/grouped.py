@@ -26,6 +26,8 @@ from typing import Callable, Iterator
 import numpy as np
 from pyspark.sql import DataFrame
 
+from ..batches import carry_groups
+
 
 def group_starts(*code_arrays: np.ndarray) -> np.ndarray:
     """Start indices of each contiguous group in already-sorted code
@@ -37,28 +39,6 @@ def group_starts(*code_arrays: np.ndarray) -> np.ndarray:
     for arr in code_arrays:
         change[1:] |= arr[1:] != arr[:-1]
     return np.flatnonzero(change)
-
-
-def _last_group_start(tbl, keys: list[str]) -> int:
-    """Start index of the trailing (possibly batch-spanning) group in a
-    sorted Arrow table — the batch-boundary cut point. Vectorized: one
-    shifted not-equal per key column instead of a per-row Python scalar
-    walk (which cost O(group_size) per batch when one group spanned a
-    whole batch). Null keys compare equal to null, like the scalar form."""
-    import pyarrow.compute as pc
-
-    n = tbl.num_rows
-    if n <= 1:
-        return 0
-    neq = None
-    for k in keys:
-        col = tbl.column(k).combine_chunks()
-        a, b = col.slice(1), col.slice(0, n - 1)
-        d = pc.or_(pc.fill_null(pc.not_equal(a, b), False),
-                   pc.xor(pc.is_null(a), pc.is_null(b)))
-        neq = d if neq is None else pc.or_(neq, d)
-    idx = np.flatnonzero(neq.to_numpy(zero_copy_only=False))
-    return int(idx[-1]) + 1 if idx.size else 0
 
 
 def grouped_map_arrow(df: DataFrame, keys: list[str], sort_cols: list[str],
@@ -79,24 +59,8 @@ def grouped_map_arrow(df: DataFrame, keys: list[str], sort_cols: list[str],
         num_partitions = sc.defaultParallelism * 2
 
     def run(it: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        carry: pa.Table | None = None
-        for rb in it:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            cut = _last_group_start(tbl, keys)
-            carry = tbl.slice(cut)
-            if cut > 0:
-                out = emit(tbl.slice(0, cut).combine_chunks())
-                if out is not None and out.num_rows:
-                    yield out
-        if carry is not None and carry.num_rows:
-            out = emit(carry.combine_chunks())
+        for out in carry_groups(
+                it, keys, lambda t: emit(t.combine_chunks())):
             if out is not None and out.num_rows:
                 yield out
 

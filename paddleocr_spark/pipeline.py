@@ -14,9 +14,11 @@ doc_id feeding the kernel. Everything before it is map-side
 whole-stage-codegen; the kernel emits fully assembled documents so no
 re-aggregation shuffle follows. The kernel is ``mapInArrow`` (not
 per-group ``applyInPandas``, not pandas) for two measured reasons — see
-``order_and_assemble`` — and string columns are only ever moved by
-vectorized Arrow ``take``, never through per-span Python objects.
-Reference parity citations live in paddleocr_spark/kernels.py.
+``order_and_assemble``. It orders every document of an Arrow batch at
+once (``_order_ranks``, no per-document Python call) and moves string
+columns only by vectorized Arrow ``take``. ``kernels.order_document`` is
+the per-document spec it must equal; reference parity citations live in
+paddleocr_spark/kernels.py.
 """
 
 from __future__ import annotations
@@ -28,7 +30,8 @@ from pyspark.sql.types import (ArrayType, IntegerType, StringType, StructField,
                                StructType)
 
 from . import geometry as G
-from .kernels import order_document
+from .batches import carry_groups
+from .kernels import order_document  # noqa: F401 (executable spec)
 
 EXTRACTED_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -149,102 +152,118 @@ def strip_styles(spans: DataFrame) -> DataFrame:
         .otherwise(col))
 
 
-def _order_ranks(doc_codes, kind_codes, text_code, kind_dict,
-                 x1, y1, x2, y2):
-    """Per-document reading-order resolution over a sorted run of spans.
+def _bubble(line, doc, x1, y1):
+    """O1's restricted bubble pass (kernels.sorted_boxes_indices), applied
+    in place to ``line`` — the (doc, y, x) lexsort of the batch.
+
+    The reference moves the box at position i+1 left while its left
+    neighbour is within 10 px in y and further right. Boxes left of it are
+    never lower, so no box crosses a y-step of 10 px or more: the pass runs
+    on each chain of sub-10 px steps that has an adjacent pair out of x
+    order (elsewhere nothing moves). Chain positions are walked in Python,
+    each step one NumPy op across all such chains.
+    """
+    ys, xs = y1[line], x1[line]
+    link = (doc[1:] == doc[:-1]) & (ys[1:] - ys[:-1] < 10)
+    starts = np.flatnonzero(np.concatenate([[True], ~link]))
+    sizes = np.diff(np.append(starts, len(line)))
+    chain = np.repeat(np.arange(len(starts)), sizes)
+    todo = np.unique(chain[1:][link & (xs[1:] < xs[:-1])])
+    s, size = starts[todo], sizes[todo]
+    for i in range(int(size.max(initial=1)) - 1):
+        live = size > i + 1
+        s, size = s[live], size[live]
+        lo, g = s, s + i
+        while g.size:
+            a, b = line[g], line[g + 1]
+            swap = (np.abs(y1[b] - y1[a]) < 10) & (x1[b] < x1[a])
+            lo, g, a, b = lo[swap], g[swap], a[swap], b[swap]
+            line[g], line[g + 1] = b, a
+            g = g - 1
+            keep = g >= lo
+            lo, g = lo[keep], g[keep]
+
+
+def _order_ranks(doc_codes, kind_codes, text_code, x1, y1, x2, y2):
+    """Reading order of every document in a batch, in one vectorized pass.
 
     Args are aligned arrays sorted by (doc_id, span_idx); ``doc_codes``
     must be grouped (all rows of a doc contiguous); kinds arrive
-    dictionary-encoded (``kind_codes`` + ``kind_dict``, ``text_code`` =
-    code of 'text' or -1). Returns (starts, take, offsets): document start
-    indices, a take-index array mapping output position → input row (docs
-    in input order, spans in reading order), and the within-doc output
-    offsets.
+    dictionary-encoded (``text_code`` = code of 'text' or -1). Returns
+    (starts, take, offsets): document start indices, a take-index array
+    mapping output position → input row (docs in input order, spans in
+    reading order), and the within-doc output offsets.
 
-    FAST PATH (the measured hot spot at web scale — per-doc Python kernel
-    calls dominate otherwise): a document's reading order equals its plain
-    stable (y, x) lexsort order whenever, on the lexsorted rows,
+    Computes exactly kernels.order_document for each doc:
 
-    * **A** no adjacent pair has 0 < Δy < 10 with x decreasing — then the
-      sorted_boxes bubble pass (kernels.sorted_boxes_indices) never swaps;
-    * **B** every region except the doc's last fails BOTH column tests of
-      sorted_layout_boxes (x1 < w/4 ∧ x2 < 3w/4; x1 > w/4 ∧ x2 > w/2) —
-      then the O2 scan buffers nothing and emits scan order (the last
-      region always emits last whichever branch it takes,
-      recovery_to_doc.py:109-127); and
-    * **C** region (y1, x1) keys are nondecreasing in first-appearance
-      order — then O2's stable pre-sort is the identity.
+    1. O1 pre-sort: stable (doc, y, x) lexsort (ties keep input order,
+       like Python's sorted()), then the bubble pass (``_bubble``).
+    2. D1 regions: kernels.segment_regions' join conditions on adjacent
+       lines of the bubbled order; region boxes by ``reduceat``.
+    3. O2 as a sort key. sorted_layout_indices pre-sorts a doc's regions
+       by (y1, x1) and scans them, buffering left-column and right-column
+       regions until a 'single' flushes left, then right, then itself.
+       So a region's emission position is (singles before it, class
+       left < right < single, scan position). The last region of a
+       multi-region doc takes the reference's dedicated branch
+       (recovery_to_doc.py:109-127): 'single' when strictly below its
+       predecessor and straddling w/2, else right if x2 > w/2, else left
+       if x1 < w/2. A single last region is emitted after the left and
+       right buffers, exactly where a right one is, so only x2 > w/2
+       decides between the two.
+    4. Lines are emitted by (doc, region rank, bubbled position).
 
-    A/B/C and the region segmentation itself (kernels.segment_regions'
-    run conditions) are all computed vectorized across the WHOLE batch;
-    only documents failing a condition take the exact per-doc kernel.
-    Bit-equality with the kernel on every doc is enforced by a hypothesis
-    differential fuzz (tests/test_kernels.py) and the committed flagship
-    fixture oracle.
+    Equality with order_document is pinned by a hypothesis differential
+    (tests/test_kernels.py) and the committed flagship fixture oracle.
     """
     n = len(doc_codes)
     bounds = np.flatnonzero(doc_codes[1:] != doc_codes[:-1]) + 1
     starts = np.concatenate([[0], bounds])
-    ends = np.concatenate([bounds, [n]])
-    n_docs = len(starts)
-    sizes = ends - starts
-    doc_idx = np.repeat(np.arange(n_docs), sizes)
+    sizes = np.diff(np.concatenate([starts, [n]]))
+    doc = np.repeat(np.arange(len(starts)), sizes)
 
-    # Global stable lexsort by (doc, y, x) — identical to sorted_boxes'
-    # pre-sort per doc (ties keep input order, matching Python sorted()).
-    order = np.lexsort((x1, y1, doc_idx))
-    xs, ys = x1[order], y1[order]
-    x2s, y2s = x2[order], y2[order]
-    ks = kind_codes[order]
-    dsorted = doc_idx[order]
+    # 1. O1 line order; doc stays grouped and ascending, so doc[line] == doc.
+    line = np.lexsort((x1, y1, doc))
+    _bubble(line, doc, x1, y1)
+    xs, ys, x2s, y2s = x1[line], y1[line], x2[line], y2[line]
+    ks = kind_codes[line]
 
-    same_doc = dsorted[1:] == dsorted[:-1]
-
-    # A: bubble pass is the identity.
-    dy = ys[1:] - ys[:-1]
-    viol_a = same_doc & (dy > 0) & (dy < 10) & (xs[1:] < xs[:-1])
-
-    # Region runs (kernels.segment_regions conditions, vectorized).
+    # 2. Region runs on the bubbled order.
     h_prev = np.maximum(y2s[:-1] - ys[:-1], 1)
     gap = ys[1:] - y2s[:-1]
     x_overlap = ~((xs[1:] >= x2s[:-1]) | (x2s[1:] <= xs[:-1]))
-    same_region = (same_doc & (ks[1:] == ks[:-1]) & (ks[1:] == text_code)
-                   & (gap < 1.5 * h_prev) & (gap > -h_prev) & x_overlap)
-    r_start = np.concatenate([[True], ~same_region])
-    r_starts = np.flatnonzero(r_start)
+    joins = ((doc[1:] == doc[:-1]) & (ks[1:] == text_code)
+             & (ks[:-1] == text_code) & (gap < 1.5 * h_prev)
+             & (gap > -h_prev) & x_overlap)
+    r_starts = np.flatnonzero(np.concatenate([[True], ~joins]))
+    r_doc = doc[r_starts]
     rx1 = np.minimum.reduceat(xs, r_starts)
     ry1 = np.minimum.reduceat(ys, r_starts)
     rx2 = np.maximum.reduceat(x2s, r_starts)
-    r_doc = dsorted[r_starts]
-    r_last = np.concatenate([r_doc[1:] != r_doc[:-1], [True]])
 
-    # B: all regions but the doc's last are 'single'.
+    # 3. O2: scan order = stable (doc, y1, x1) pre-sort of the regions.
+    scan = np.lexsort((rx1, ry1, r_doc))
+    rx1, rx2 = rx1[scan], rx2[scan]
     w = float(G.PAGE_WIDTH)
-    left_col = (rx1 < w / 4) & (rx2 < 3 * w / 4)
-    right_col = (rx1 > w / 4) & (rx2 > w / 2)
-    viol_b = (left_col | right_col) & ~r_last
+    left = (rx1 < w / 4) & (rx2 < 3 * w / 4)
+    right = (rx1 > w / 4) & (rx2 > w / 2)
+    cls = np.where(left, 0, np.where(right, 1, 2))
+    last = np.flatnonzero(np.concatenate([r_doc[1:] != r_doc[:-1], [True]]))
+    last = last[(last > 0) & (r_doc[last - 1] == r_doc[last])]
+    cls[last] = np.select([rx2[last] > w / 2, rx1[last] < w / 2], [1, 0], -1)
+    if (cls[last] < 0).any():
+        # The reference silently drops the region (and its buffers) here;
+        # P9 guarantees x2 > x1, so this can only be a corrupt box.
+        raise ValueError("last layout region has x2 <= w/2 <= x1")
+    single = cls == 2
+    segment = np.cumsum(single) - single
+    region_rank = np.empty(len(scan), dtype=np.int64)
+    emitted = scan[np.lexsort((cls, segment, r_doc))]
+    region_rank[emitted] = np.arange(len(scan))
 
-    # C: region keys nondecreasing within doc.
-    r_same_doc = r_doc[1:] == r_doc[:-1]
-    key_dec = (ry1[1:] < ry1[:-1]) | ((ry1[1:] == ry1[:-1])
-                                      & (rx1[1:] < rx1[:-1]))
-    viol_c = r_same_doc & key_dec
-
-    complex_doc = np.zeros(n_docs, dtype=bool)
-    complex_doc[dsorted[1:][viol_a]] = True
-    complex_doc[r_doc[viol_b]] = True
-    complex_doc[r_doc[1:][viol_c]] = True
-
-    # Fast docs: reading order IS the lexsorted row order.
-    take = order.copy()
-    for d in np.flatnonzero(complex_doc):
-        s, e = starts[d], ends[d]
-        if e - s == 1:
-            continue
-        rank = order_document(
-            [kind_dict[c] for c in kind_codes[s:e]],
-            x1[s:e], y1[s:e], x2[s:e], y2[s:e], G.PAGE_WIDTH)
-        take[s:e] = s + rank.argsort(kind="stable")
+    # 4. Lines by (doc, region rank, bubbled position).
+    line_region = np.repeat(region_rank, np.diff(np.append(r_starts, n)))
+    take = line[np.argsort(line_region, kind="stable")]
     offsets = np.arange(n, dtype=np.int64) - np.repeat(starts, sizes)
     return starts, take, offsets
 
@@ -252,8 +271,7 @@ def _order_ranks(doc_codes, kind_codes, text_code, kind_dict,
 def _emit_arrow(tbl: "pa.Table"):
     """Assemble one run of complete documents into an Arrow RecordBatch of
     (doc_id, spans) — all column movement via vectorized Arrow take and
-    dictionary codes; the only per-span Python objects are the kind
-    strings of documents on the exact-kernel slow path."""
+    dictionary codes, never through per-span Python objects."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -262,14 +280,10 @@ def _emit_arrow(tbl: "pa.Table"):
     doc_codes = np.asarray(doc_col.dictionary_encode().indices)
     kind_enc = kind_col.dictionary_encode()
     kind_codes = np.asarray(kind_enc.indices)
-    kind_dict = kind_enc.dictionary.to_pylist()
-    text_code = kind_dict.index("text") if "text" in kind_dict else -1
-    x1 = tbl.column("x1").to_numpy()
-    y1 = tbl.column("y1").to_numpy()
-    x2 = tbl.column("x2").to_numpy()
-    y2 = tbl.column("y2").to_numpy()
+    text_code = kind_enc.dictionary.index("text").as_py()  # -1: no text
     starts, take, offsets = _order_ranks(
-        doc_codes, kind_codes, text_code, kind_dict, x1, y1, x2, y2)
+        doc_codes, kind_codes, text_code,
+        *(tbl.column(c).to_numpy() for c in ("x1", "y1", "x2", "y2")))
 
     idx = pa.array(take)
     kind_o = pc.take(kind_col, idx)
@@ -290,26 +304,7 @@ def _assemble_arrow(it):
     """mapInArrow body: batches of one hash-partition arrive sorted by
     (doc_id, span_idx); the last (possibly incomplete) document of each
     batch is carried into the next before assembly."""
-    import pyarrow as pa
-
-    carry: pa.Table | None = None
-    for rb in it:
-        tbl = pa.Table.from_batches([rb])
-        if carry is not None:
-            tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-        n = tbl.num_rows
-        if n == 0:
-            continue
-        doc = tbl.column("doc_id")
-        last = doc[n - 1]
-        cut = n - 1
-        while cut > 0 and doc[cut - 1] == last:
-            cut -= 1
-        carry = tbl.slice(cut)
-        if cut > 0:
-            yield _emit_arrow(tbl.slice(0, cut))
-    if carry is not None and carry.num_rows:
-        yield _emit_arrow(carry)
+    return carry_groups(it, ["doc_id"], _emit_arrow)
 
 
 def order_and_assemble(spans: DataFrame,
@@ -317,7 +312,7 @@ def order_and_assemble(spans: DataFrame,
     """Reading-order resolution + document re-assembly (the one shuffle).
 
     Physical strategy (deliberate, see BENCH notes): an EXPLICIT
-    ``repartition(n, doc_id)`` + ``sortWithinPartitions`` + ``mapInPandas``
+    ``repartition(n, doc_id)`` + ``sortWithinPartitions`` + ``mapInArrow``
     instead of ``groupBy(doc_id).applyInPandas``, because
 
     * per-group applyInPandas pays Arrow slicing + pandas construction per

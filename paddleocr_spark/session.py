@@ -13,10 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the host's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(app: str = "paddleocr-spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         # 2× cores: enough slots for AQE to coalesce down, few enough that
         # sf-scale partitions stay >memory-trivial. At cluster scale this is

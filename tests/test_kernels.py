@@ -275,7 +275,7 @@ def test_sorted_layout_is_permutation(pts):
 
 
 # ---------------------------------------------------------------------------
-# Vectorized reading-order fast path: differential fuzz vs exact kernel
+# Batch-vectorized reading-order kernel: differential vs the exact spec
 # ---------------------------------------------------------------------------
 
 _span_st = st.tuples(
@@ -284,61 +284,139 @@ _span_st = st.tuples(
     st.integers(0, 60),      # y1 grid index
 )
 
+_KIND_DICT = ["text", "media", "table", "title"]
+
 
 def _build_doc(spans):
-    """(kind, xg, yg) draws → aligned box arrays; grids chosen to hit the
-    fast-path boundaries: x spans the w/4, w/2, 3w/4 column thresholds and
-    y steps of 3 produce |dy| in {0,3,6,9,12,...} straddling the 10px rule
-    and the gap<1.5h region condition (text h=10)."""
+    """(kind, xg, yg) draws → (kind, x1, y1, x2, y2) boxes; grids chosen to
+    hit the kernel's boundaries: x spans the w/4, w/2, 3w/4 column
+    thresholds and y steps of 3 produce |dy| in {0,3,6,9,12,...}
+    straddling the 10px rule and the gap<1.5h region condition (text
+    h=10)."""
     import paddleocr_spark.geometry as G
-    kinds, x1, y1, x2, y2 = [], [], [], [], []
+    out = []
     for kind, xg, yg in spans:
         x, y = xg * 25, yg * 3
-        w = G.KIND_WIDTH_FIXED.get(kind, 310)
-        h = G.KIND_HEIGHT[kind]
-        kinds.append(kind)
-        x1.append(x)
-        y1.append(y)
-        x2.append(x + w)
-        y2.append(y + h)
-    return kinds, x1, y1, x2, y2
+        out.append((kind, x, y, x + G.KIND_WIDTH_FIXED.get(kind, 310),
+                    y + G.KIND_HEIGHT[kind]))
+    return out
 
 
-@settings(max_examples=300, deadline=None)
-@given(st.lists(st.lists(_span_st, min_size=1, max_size=9),
-                min_size=1, max_size=6))
-def test_order_ranks_fast_path_matches_exact_kernel(docs):
-    import numpy as np
-    from paddleocr_spark.kernels import order_document
+def _batch_take(docs):
+    """Run pipeline._order_ranks over docs (lists of (kind, x1, y1, x2,
+    y2) boxes) laid out as one batch."""
     from paddleocr_spark.pipeline import _order_ranks
 
-    kind_dict = ["text", "media", "table", "title"]
-    code = {k: i for i, k in enumerate(kind_dict)}
-    doc_codes, kind_codes = [], []
-    X1, Y1, X2, Y2 = [], [], [], []
-    per_doc = []
-    for d, spans in enumerate(docs):
-        kinds, x1, y1, x2, y2 = _build_doc(spans)
-        per_doc.append((kinds, x1, y1, x2, y2))
-        doc_codes += [d] * len(kinds)
-        kind_codes += [code[k] for k in kinds]
-        X1 += x1
-        Y1 += y1
-        X2 += x2
-        Y2 += y2
-    starts, take, offsets = _order_ranks(
-        np.asarray(doc_codes), np.asarray(kind_codes), code["text"],
-        kind_dict, np.asarray(X1), np.asarray(Y1), np.asarray(X2),
-        np.asarray(Y2))
-    # expected: per-doc exact kernel
-    pos = 0
-    exp_take = []
-    for kinds, x1, y1, x2, y2 in per_doc:
-        rank = order_document(kinds, np.asarray(x1), np.asarray(y1),
-                              np.asarray(x2), np.asarray(y2), 1000)
-        exp_take += list(pos + rank.argsort(kind="stable"))
-        pos += len(kinds)
-    assert list(take) == exp_take
+    rows = [(d, _KIND_DICT.index(b[0])) + b[1:]
+            for d, boxes in enumerate(docs) for b in boxes]
+    doc, kind, x1, y1, x2, y2 = (np.asarray(c) for c in zip(*rows))
+    return _order_ranks(doc, kind, _KIND_DICT.index("text"), x1, y1, x2, y2)
+
+
+def _exact_take(docs):
+    """The same take computed doc by doc with kernels.order_document."""
+    from paddleocr_spark.kernels import order_document
+
+    pos, take = 0, []
+    for boxes in docs:
+        kinds = [b[0] for b in boxes]
+        x1, y1, x2, y2 = (np.asarray(c) for c in list(zip(*boxes))[1:])
+        rank = order_document(kinds, x1, y1, x2, y2, 1000)
+        take += (pos + rank.argsort(kind="stable")).tolist()
+        pos += len(boxes)
+    return take
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(st.lists(_span_st, min_size=1, max_size=30),
+                min_size=1, max_size=8))
+def test_order_ranks_matches_exact_kernel(docs):
+    docs = [_build_doc(spans) for spans in docs]
+    starts, take, offsets = _batch_take(docs)
+    assert take.tolist() == _exact_take(docs)
+    sizes = [len(d) for d in docs]
+    assert starts.tolist() == np.cumsum([0] + sizes[:-1]).tolist()
+    assert offsets.tolist() == [i for n in sizes for i in range(n)]
+
+
+def test_order_ranks_last_region_single_below_straddling():
+    # left, right, left, then a last region strictly below the previous
+    # one that straddles w/2: flush left, right, then emit it as single.
+    doc = [("media", 0, 0, 200, 50), ("media", 600, 0, 900, 50),
+           ("media", 0, 100, 200, 150), ("media", 300, 200, 700, 250)]
+    assert _batch_take([doc])[1].tolist() == [0, 2, 1, 3] == _exact_take([doc])
+
+
+def test_order_ranks_last_region_right():
+    # The last region is not below its predecessor and x2 > w/2, so it
+    # joins the right buffer; as a non-last region it would be 'left'.
+    doc = [("media", 0, 0, 200, 50), ("media", 100, 100, 800, 150),
+           ("media", 600, 200, 900, 250), ("media", 0, 210, 600, 260)]
+    assert _batch_take([doc])[1].tolist() == [0, 1, 2, 3] == _exact_take([doc])
+
+
+def test_order_ranks_last_region_left():
+    # The last region is not below its predecessor and x2 <= w/2, so it
+    # joins the left buffer ahead of the buffered right region; as a
+    # non-last region it would be 'single' (x1 > w/4, x2 <= w/2).
+    doc = [("media", 600, 0, 900, 50), ("media", 0, 10, 200, 60),
+           ("media", 300, 30, 450, 80)]
+    assert _batch_take([doc])[1].tolist() == [1, 2, 0] == _exact_take([doc])
+
+
+def test_order_ranks_rejects_impossible_last_region():
+    # x2 <= w/2 <= x1 matches no branch of the reference's last-region
+    # rule, which would silently drop the region; P9 rules it out for real
+    # boxes, so the kernel must refuse instead of losing spans.
+    import pytest
+    for x1, x2 in ((600, 400), (500, 500)):
+        doc = [("media", 0, 0, 200, 80), ("media", x1, 10, x2, 90)]
+        with pytest.raises(ValueError):
+            _batch_take([doc])
+
+
+def test_bubble_moves_one_box_three_positions():
+    from paddleocr_spark.pipeline import _bubble
+
+    # y = 0, 3, 6, 9 with x falling: the last box bubbles to the front.
+    doc = [("text", 300, 0, 610, 10), ("text", 200, 3, 510, 13),
+           ("text", 100, 6, 410, 16), ("text", 0, 9, 310, 19)]
+    x1 = np.array([b[1] for b in doc])
+    y1 = np.array([b[2] for b in doc])
+    line = np.lexsort((x1, y1))
+    _bubble(line, np.zeros(4, dtype=np.int64), x1, y1)
+    assert line.tolist() == [3, 2, 1, 0]
+    assert line.tolist() == sorted_boxes_indices(
+        np.stack([x1, y1], axis=1)).tolist()
+    # every bubbled pair jumps back in y, so each line is its own region;
+    # O2 then buffers the three left-column lines ahead of the right one.
+    assert _batch_take([doc])[1].tolist() == [1, 2, 3, 0] == _exact_take([doc])
+
+
+def test_bubble_stops_at_a_10px_step():
+    from paddleocr_spark.pipeline import _bubble
+
+    # y = 0, 5, 10 with x falling: the middle box swaps ahead of the top
+    # one; the bottom box then faces the top box exactly 10 px above it
+    # and must not pass it.
+    x1, y1 = np.array([500, 400, 300]), np.array([0, 5, 10])
+    line = np.arange(3)
+    _bubble(line, np.zeros(3, dtype=np.int64), x1, y1)
+    assert line.tolist() == [1, 0, 2] == sorted_boxes_indices(
+        np.stack([x1, y1], axis=1)).tolist()
+
+
+def test_order_ranks_one_span_doc_between_multi_span_docs():
+    a = [("text", 300, 0, 610, 10), ("text", 200, 3, 510, 13),
+         ("text", 100, 6, 410, 16)]
+    b = [("title", 50, 40, 690, 56)]
+    c = [("media", 600, 0, 800, 80), ("media", 0, 5, 200, 85),
+         ("text", 0, 100, 310, 110)]
+    starts, take, offsets = _batch_take([a, b, c])
+    assert starts.tolist() == [0, 3, 4]
+    assert take.tolist() == _exact_take([a, b, c])
+    assert take[3] == 3
+    assert offsets.tolist() == [0, 1, 2, 0, 0, 1, 2]
 
 
 def test_nms_locality_weighted_merge_hand_case():
