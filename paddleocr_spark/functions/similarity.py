@@ -447,10 +447,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def neardup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached near-dup pair table: the correctness gate and bench
-    run ``embedding_neardup`` then ``neardup_components`` back to back, and
-    the component step re-reads the pairs — one materialization serves
-    both (same persisted-build-side policy as the dedup band tables)."""
+    """Session-cached ``embedding_neardup`` pair table, the shared input of
+    ``neardup_components`` and ``neardup_survivors``: one materialization
+    serves both (same persisted-build-side policy as the dedup band
+    tables). The ``embedding_neardup`` query itself stays uncached."""
     from .dedup import _cached
     return _cached(spark, sf_dir, "neardup_pairs",
                    lambda: embedding_neardup(spark, sf_dir))

@@ -338,29 +338,6 @@ def _check_and_validate_polys(polys, tags, im_size):
             np.array(hv_tags))
 
 
-def _adjust_point(poly):
-    """pg_process.py:574-598 (used by neither default path but part of
-    the public surface; kept for parity tests)."""
-    point_num = poly.shape[0]
-    if point_num == 4:
-        len_1 = np.linalg.norm(poly[0] - poly[1])
-        len_2 = np.linalg.norm(poly[1] - poly[2])
-        len_3 = np.linalg.norm(poly[2] - poly[3])
-        len_4 = np.linalg.norm(poly[3] - poly[0])
-        if (len_1 + len_3) * 1.5 < (len_2 + len_4):
-            poly = poly[[1, 2, 3, 0], :]
-    elif point_num > 4:
-        v1 = poly[0] - poly[1]
-        v2 = poly[1] - poly[2]
-        cos_theta = np.dot(v1, v2) / (
-            np.linalg.norm(v1) * np.linalg.norm(v2) + 1e-6)
-        theta = np.arccos(np.round(cos_theta, decimals=4))
-        if abs(theta) > (70 / 180 * math.pi):
-            index = list(range(1, point_num)) + [0]
-            poly = poly[np.array(index), :]
-    return poly
-
-
 def _gen_min_area_quad_from_poly(poly):
     point_num = poly.shape[0]
     if point_num == 4:
@@ -443,25 +420,6 @@ def _line_cross_two_point(A, B):
 def _average_angle(poly):
     p0, p1, p2, p3 = poly
     return (_vector_angle(p3, p0) + _vector_angle(p2, p1)) / 2
-
-
-def _line_cross_point(line1, line2):
-    a1, b1, c1 = line1
-    a2, b2, c2 = line2
-    d = a1 * b2 - a2 * b1
-    if d == 0:
-        return np.array([0, 0], dtype=np.float32)
-    x = (b1 * c2 - b2 * c1) / d
-    y = (a2 * c1 - a1 * c2) / d
-    return np.array([x, y], dtype=np.float32)
-
-
-def _quad2tcl(poly, ratio):
-    ratio_pair = np.array([[0.5 - ratio / 2], [0.5 + ratio / 2]],
-                          dtype=np.float32)
-    p0_3 = poly[0] + (poly[3] - poly[0]) * ratio_pair
-    p1_2 = poly[1] + (poly[2] - poly[1]) * ratio_pair
-    return np.array([p0_3[0], p1_2[0], p1_2[1], p0_3[1]])
 
 
 def _poly2tcl(poly, ratio):

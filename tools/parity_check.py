@@ -5,18 +5,26 @@ Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB against the same sf dir, then compares
 row count, schema (column names), and order-insensitive values
 (columns sorted by name, rows sorted, exact string compare after a
-canonical repr). Prints one line per query and a final summary.
+canonical repr). Prints one line per query and a final summary; a query
+without an oracle twin is a FAIL.
+
+A run over all queries (no query names given) ends by writing the gate
+ledger GATE_COVERAGE.json at the repo root: the registry order, each
+invoked query with the sf_dir it ran on, and the entries not invoked.
 
 Usage: python tools/parity_check.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import sys
+import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -42,6 +50,16 @@ def frame_repr(cols, rows):
     return [c for c in sorted(cols)], out
 
 
+def write_ledger(registry: list[str], invoked: dict, started: float) -> None:
+    ledger = {"session_started_at": started, "registry": registry,
+              "invoked": invoked,
+              "not_invoked": [q for q in registry if q not in invoked]}
+    path = os.path.join(ROOT, "GATE_COVERAGE.json")
+    with open(path + ".tmp", "w") as fh:
+        json.dump(ledger, fh, indent=1)
+    os.replace(path + ".tmp", path)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -62,13 +80,18 @@ def main() -> int:
         "SPARK_GRAFT_CPUS", "8")))
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    n_pass = n_fail = n_rowsonly = 0
-    import time
+    n_pass = n_fail = 0
+    invoked: dict[str, dict] = {}
     t_all = time.time()
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if name not in oracles:
+            print(f"FAIL  {name}: no oracle_sql() twin")
+            n_fail += 1
+            continue
         t0 = time.time()
+        invoked[name] = {"sf_dir": sf_dir, "ts": t0}
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
@@ -78,10 +101,6 @@ def main() -> int:
             n_fail += 1
             continue
         t_spark = time.time() - t0
-        if name not in oracles:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle)")
-            n_rowsonly += 1
-            continue
         try:
             rel = con.sql(oracles[name])
             dcols = rel.columns
@@ -109,9 +128,11 @@ def main() -> int:
                   f"[{time.time() - t0:.1f}s = {t_spark:.1f}s spark + "
                   f"{time.time() - t0 - t_spark:.1f}s duckdb]")
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only "
+    print(f"== {n_pass} pass, {n_fail} fail "
           f"[{time.time() - t_all:.1f}s total] ==")
     spark.stop()
+    if not only:
+        write_ledger(list(qs), invoked, t_all)
     return 1 if n_fail else 0
 
 
