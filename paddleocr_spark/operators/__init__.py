@@ -13,8 +13,9 @@
 from ..kernels import (ctc_decode, hard_nms, match_cells, order_document,
                        segment_regions, sorted_boxes_indices,
                        sorted_layout_indices, strip_style_tokens)
-from ..pipeline import (det_filter, drop_score_filter, explode_spans, extract,
-                        order_and_assemble, strip_styles, with_geometry)
+from ..pipeline import (assemble, det_filter, drop_score_filter,
+                        explode_spans, extract, order_and_assemble,
+                        strip_styles, with_geometry)
 from .recognize import classify_rotate, ctc_encode_expr, recognize
 from .spatial import nms_per_class, salted_repartition
 
@@ -22,7 +23,8 @@ __all__ = [
     "ctc_decode", "hard_nms", "match_cells", "order_document",
     "segment_regions", "sorted_boxes_indices", "sorted_layout_indices",
     "strip_style_tokens", "det_filter", "drop_score_filter", "explode_spans",
-    "extract", "order_and_assemble", "strip_styles", "with_geometry",
+    "extract", "assemble", "order_and_assemble", "strip_styles",
+    "with_geometry",
     "classify_rotate", "ctc_encode_expr", "recognize", "nms_per_class",
     "salted_repartition",
 ]

@@ -4,21 +4,25 @@ Restates the reference dataflow (SURVEY.md §3.2):
 
     documents → explode spans → geometry (JVM) → det filter P9 (JVM)
     → drop_score P10 (JVM) → style strip P11 (JVM replace chain)
-    → repartition(n, doc_id) + sortWithinPartitions → mapInArrow kernel
-      (sorted_boxes O1 + region segmentation D1 + sorted_layout_boxes O2 +
-      ordered emission O5, Arrow-native reassembly)
+    → mapInArrow kernel (sorted_boxes O1 + region segmentation D1 +
+      sorted_layout_boxes O2 + ordered emission O5, Arrow-native
+      reassembly)
     → extracted (doc_id, spans array<struct<kind,text,media_ref,offset>>)
 
-Exactly ONE payload shuffle end-to-end: the explicit hash repartition on
-doc_id feeding the kernel. Everything before it is map-side
-whole-stage-codegen; the kernel emits fully assembled documents so no
-re-aggregation shuffle follows. The kernel is ``mapInArrow`` (not
-per-group ``applyInPandas``, not pandas) for two measured reasons — see
-``order_and_assemble``. It orders every document of an Arrow batch at
-once (``_order_ranks``, no per-document Python call) and moves string
-columns only by vectorized Arrow ``take``. ``kernels.order_document`` is
-the per-document spec it must equal; reference parity citations live in
-paddleocr_spark/kernels.py.
+No payload shuffle: one documents row is a whole document, so after the
+explode its spans are already contiguous, in span_idx order, inside one
+task, and the kernel runs there (``assemble``). Everything before it is
+whole-stage codegen in the same task, and the kernel emits fully
+assembled documents, so no re-aggregation shuffle follows either. The
+only exchange left is ``ensure_input_parallelism``'s round-robin widening
+of an under-partitioned scan, which moves whole document rows.
+``order_and_assemble`` is the shuffled entry for spans that were moved
+between partitions. The kernel is ``mapInArrow`` (not per-group
+``applyInPandas``, not pandas) — see ``assemble``. It orders every
+document of an Arrow batch at once (``_order_ranks``, no per-document
+Python call) and moves string columns only by vectorized Arrow ``take``.
+``kernels.order_document`` is the per-document spec it must equal;
+reference parity citations live in paddleocr_spark/kernels.py.
 """
 
 from __future__ import annotations
@@ -187,8 +191,8 @@ def _bubble(line, doc, x1, y1):
 def _order_ranks(doc_codes, kind_codes, text_code, x1, y1, x2, y2):
     """Reading order of every document in a batch, in one vectorized pass.
 
-    Args are aligned arrays sorted by (doc_id, span_idx); ``doc_codes``
-    must be grouped (all rows of a doc contiguous); kinds arrive
+    Args are aligned arrays, each doc's rows contiguous in span_idx
+    order (``doc_codes`` grouped, docs in any order); kinds arrive
     dictionary-encoded (``text_code`` = code of 'text' or -1). Returns
     (starts, take, offsets): document start indices, a take-index array
     mapping output position → input row (docs in input order, spans in
@@ -301,40 +305,53 @@ def _emit_arrow(tbl: "pa.Table"):
 
 
 def _assemble_arrow(it):
-    """mapInArrow body: batches of one hash-partition arrive sorted by
-    (doc_id, span_idx); the last (possibly incomplete) document of each
-    batch is carried into the next before assembly."""
+    """mapInArrow body: batches of one partition arrive with each
+    document's spans contiguous and in span_idx order; the last (possibly
+    incomplete) document of each batch is carried into the next before
+    assembly."""
     return carry_groups(it, ["doc_id"], _emit_arrow)
+
+
+def assemble(spans: DataFrame) -> DataFrame:
+    """Reading-order resolution + document re-assembly, map-side.
+
+    Precondition: each document's spans are contiguous within ONE
+    partition, in span_idx order. ``explode_spans`` over whole-document
+    rows (doc_id unique — the table key) followed only by row-local
+    stages gives exactly that, so the kernel runs in the scan's own tasks
+    with no exchange and no sort. Use ``order_and_assemble`` when spans
+    may have moved between partitions.
+
+    ``mapInArrow`` rather than ``groupBy(doc_id).applyInPandas``: per-group
+    applyInPandas pays Arrow slicing + pandas construction per document —
+    ruinous for web-scale corpora of small docs (40k docs/task at sf0.1 ⇒
+    the Python stage dominated wall time ~2×).
+    """
+    return spans.select(
+        "doc_id", "span_idx", "kind", "text", "media_ref",
+        "x1", "y1", "x2", "y2",
+    ).mapInArrow(_assemble_arrow, schema=EXTRACTED_SCHEMA)
 
 
 def order_and_assemble(spans: DataFrame,
                        num_partitions: int | None = None) -> DataFrame:
-    """Reading-order resolution + document re-assembly (the one shuffle).
+    """``assemble`` after regrouping spans by document (one shuffle).
 
-    Physical strategy (deliberate, see BENCH notes): an EXPLICIT
-    ``repartition(n, doc_id)`` + ``sortWithinPartitions`` + ``mapInArrow``
-    instead of ``groupBy(doc_id).applyInPandas``, because
-
-    * per-group applyInPandas pays Arrow slicing + pandas construction per
-      document — ruinous for web-scale corpora of small docs (40k docs/task
-      at sf0.1 ⇒ the Python stage dominated wall time ~2×);
-    * AQE coalesces shuffle partitions by BYTE size, but this stage is
-      CPU-bound in Python at very low bytes/CPU — byte-based coalescing
-      collapsed it to ~9 tasks on 32 cores. An explicit repartition count
-      is exempt from AQE coalescing, keeping the Python stage wide.
-
-    Hash partitioning on doc_id guarantees each document lands whole in one
-    partition; the within-partition sort makes output independent of both
-    partition count and input row order.
+    The general entry for spans that may sit in any partition and order
+    (the registry's ``OrderAssemble`` stage): hash partitioning on doc_id
+    lands each document whole in one partition, and the within-partition
+    sort restores ``assemble``'s precondition, so output is independent
+    of both partition count and input row order. The repartition count is
+    explicit because AQE coalesces shuffle partitions by BYTE size, while
+    this stage is CPU-bound in Python at very low bytes/CPU — byte-based
+    coalescing collapsed it to ~9 tasks on 32 cores; an explicit count is
+    exempt from AQE coalescing.
     """
     if num_partitions is None:
         sc = spans.sparkSession.sparkContext
         num_partitions = sc.defaultParallelism * 2
-    df = (spans.select("doc_id", "span_idx", "kind", "text", "media_ref",
-                       "x1", "y1", "x2", "y2")
-          .repartition(num_partitions, "doc_id")
-          .sortWithinPartitions("doc_id", "span_idx"))
-    return df.mapInArrow(_assemble_arrow, schema=EXTRACTED_SCHEMA)
+    return assemble(spans.repartition(num_partitions, "doc_id")
+                    .sortWithinPartitions("doc_id", "span_idx"))
 
 
 def ensure_input_parallelism(documents: DataFrame,
@@ -369,4 +386,4 @@ def extract(documents: DataFrame,
     s = det_filter(s)
     s = drop_score_filter(s, drop_score)
     s = strip_styles(s)
-    return order_and_assemble(s)
+    return assemble(s)

@@ -19,7 +19,7 @@ import pytest
 SF = "/root/testdata/sf0.001"
 
 REPRESENTATIVE = [
-    "flagship_extract",        # mapInArrow reading-order carry
+    "flagship_extract",        # map-side mapInArrow kernel + batch carry
     "table_html_master",       # grouped-Arrow token walk
     "cell_match",              # min_by (1-IoU, dis, cell_id) tie-break
     "neardup_components",      # iterative large/small-star CC

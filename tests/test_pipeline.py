@@ -33,11 +33,39 @@ def test_extract_equals_oracle(documents, oracle_rows):
     assert mismatched == []
 
 
-def test_extract_partition_invariant(documents, oracle_rows):
-    """SURVEY.md §7 hard-point #2: identical output at any partitioning."""
-    for n in (1, 7):
-        rows = _collect(extract(synth_spans(documents.repartition(n))))
-        assert rows == oracle_rows
+def test_extract_partition_invariant(spark, documents, oracle_rows):
+    """SURVEY.md §7 hard-point #2: identical output at any partitioning.
+
+    The kernel runs map-side, so the layouts that reach it are the input
+    partitioning and the Arrow batch boundaries inside the carry (a
+    3-record batch splits most documents), not shuffle partitions."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for batch in (3, 10000):
+            spark.conf.set(key, str(batch))
+            for n in (1, 7, 13):
+                docs = documents.repartition(n)
+                rows = _collect(extract(synth_spans(docs)))
+                assert rows == oracle_rows, (batch, n)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_registry_chain_equals_extract(documents):
+    """The general path (registry DEFAULT_CONFIG: doc_id shuffle + sort
+    before the kernel) and the map-side ``extract`` collect identical
+    rows — also when a salted repartition first scatters each document's
+    spans over several partitions, which only the regrouping undoes."""
+    from paddleocr_spark.registry import (DEFAULT_CONFIG, create_operators,
+                                          transform)
+    spans = synth_spans(documents)
+    want = _collect(extract(spans))
+    salted = DEFAULT_CONFIG[:-1] + [
+        {"SaltedRepartition": {"num_partitions": 7}}, DEFAULT_CONFIG[-1]]
+    for config in (DEFAULT_CONFIG, salted):
+        got = _collect(transform(spans, create_operators(config)))
+        assert got == want
 
 
 def test_extract_covers_fixture_paths(documents, oracle_rows):

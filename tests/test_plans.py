@@ -51,20 +51,38 @@ def test_sar_decode_is_pure_projection(spark):
     assert "Scan parquet" in plan
 
 
-def test_flagship_has_exactly_one_payload_shuffle(spark):
-    """extract(): ONE hash exchange (doc_id repartition for the
-    reading-order kernel); scan prunes to (doc_id, spans)."""
-    from paddleocr_spark.pipeline import extract
+def _materialized_corpus(spark, tmp_path):
+    """The synth corpus written as one parquet file per core, so the plan
+    under test is the extraction side only (as in bench.py) and the scan
+    is already as wide as ``ensure_input_parallelism`` asks."""
     from paddleocr_spark.synth import synth_spans
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    corpus = synth_spans(docs)
-    # materialize the synth to parquet so the plan under test is the
-    # extraction side only (as in bench.py)
-    import tempfile
-    path = tempfile.mkdtemp() + "/c"
-    corpus.write.mode("overwrite").parquet(path)
-    out = extract(spark.read.parquet(path))
-    plan = _plan(out)
+    path = str(tmp_path / "c")
+    (synth_spans(docs).repartition(spark.sparkContext.defaultParallelism)
+     .write.parquet(path))
+    return spark.read.parquet(path)
+
+
+def test_flagship_has_no_payload_shuffle(spark, tmp_path):
+    """extract(): the reading-order kernel runs map-side on the exploded
+    whole-document rows — no exchange, no sort, no repartition."""
+    from paddleocr_spark.pipeline import extract
+    plan = _plan(extract(_materialized_corpus(spark, tmp_path)))
+    assert "MapInArrow" in plan
+    assert "Exchange hashpartitioning" not in plan
+    assert "Sort [" not in plan
+    assert "REPARTITION_BY_NUM" not in plan
+
+
+def test_order_and_assemble_has_exactly_one_payload_shuffle(spark, tmp_path):
+    """order_and_assemble(): the general regrouping entry keeps ONE hash
+    exchange on doc_id (explicit count, AQE-coalesce-exempt) feeding the
+    within-partition sort and the kernel."""
+    from paddleocr_spark.pipeline import (explode_spans, order_and_assemble,
+                                          with_geometry)
+    spans = with_geometry(explode_spans(_materialized_corpus(spark,
+                                                             tmp_path)))
+    plan = _plan(order_and_assemble(spans))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "REPARTITION_BY_NUM" in plan          # AQE-coalesce-exempt
     assert "MapInArrow" in plan
